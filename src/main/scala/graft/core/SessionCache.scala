@@ -155,6 +155,17 @@ object SessionCache {
     if (df != null) df.unpersist(blocking = false)
   }
 
+  /** Drop every entry of `dir` whose kind starts with one of `prefixes` —
+    * parameterized kinds (`ngram_pairs@0.2`, `semantic_clusters_0.35`)
+    * included, so a caller never has to list each variant it ever built.
+    * Walks `locks`, which holds every key ever built or being built, so
+    * in-flight builds see their generation bumped like `invalidate`. */
+  def invalidatePrefixed(spark: SparkSession, dir: String, prefixes: Seq[String]): Unit =
+    locks.keySet().forEach { k =>
+      if ((k._1 eq spark) && k._3 == dir && prefixes.exists(k._2.startsWith))
+        invalidate(spark, k._2, dir)
+    }
+
   /** Drop every entry of a session (before spark.stop()). */
   def clear(spark: SparkSession): Unit = {
     val it = tables.keySet().iterator()

@@ -1,8 +1,9 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.queries.TickQueries
+import graft.storage.TickTable
 
 /** Streaming ingest pipeline (SURVEY §3.1): frames -> decode -> broadcast
   * enrichment -> 5 s micro-batch Parquet append with checkpointing.
@@ -18,6 +19,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replaces itself instead of duplicating), and the (token,
   * sequence_number) dedup in Bars covers source-side redelivery.
   *
+  * A micro-batch is one narrow stage: source slice -> decode -> enrich
+  * -> sort -> write, with no shuffle. The token directory is loaded once
+  * per stream, as the reference loads it once at start, so each batch
+  * broadcasts a local relation and never re-reads tokens.json; a large
+  * batch gets its parallelism from the source's frame slices.
+  *
   * Scale: the sink is date-partitioned and sorted within partitions by
   * event time, approximating the reference's MergeTree ORDER BY timestamp
   * (/root/reference/db/clickhouse.go:26-27) — time-range queries prune
@@ -28,7 +35,10 @@ object IngestStream {
   /** Wire the pipeline: returns the started query. `frames` is any
     * streaming Dataset of raw frames (MemoryStream in tests; a Kafka or
     * file source in production — the reconnect/backoff logic of the
-    * reference's WS client is subsumed by source retry + checkpoint). */
+    * reference's WS client is subsumed by source retry + checkpoint).
+    * `tokenDim` is joined into every micro-batch: pass
+    * `TokenDirectory.load`'s local relation, not a file-backed frame,
+    * or each batch re-scans the directory's files. */
   def start(
       spark: SparkSession,
       frames: Dataset[Array[Byte]],
@@ -43,7 +53,7 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.storage.TickTable.appendBatch(batch, sinkDir, batchId)
+        TickTable.appendBatch(batch, sinkDir, batchId)
       }
       .start()
   }
@@ -66,21 +76,8 @@ object IngestStream {
     * (/root/reference/db/clickhouse.go:122-187), re-expressed over the
     * sink table: latest row + daily stats for a token. */
   def verifyLastInserted(spark: SparkSession, sinkDir: String, token: String): DataFrame =
-    spark.read.parquet(sinkDir)
-      .filter(col("token") === token)
-      .orderBy(col("exchange_timestamp").desc, col("sequence_number").desc)
-      .limit(1)
+    TickQueries.latestTick(TickTable.read(spark, sinkDir), token)
 
   def dailyStats(spark: SparkSession, sinkDir: String, token: String): DataFrame =
-    spark.read.parquet(sinkDir)
-      .filter(col("token") === token)
-      .groupBy(to_date(col("exchange_timestamp")).as("trade_date"))
-      .agg(
-        // reference parity: session extremes, not captured-LTP extremes
-        // (/root/reference/db/clickhouse.go:159-162); LTP frames fall back
-        min(coalesce(col("low_price"), col("last_traded_price"))).as("low_price"),
-        max(coalesce(col("high_price"), col("last_traded_price"))).as("high_price"),
-        sum("volume").as("total_volume"),
-        count(lit(1)).as("tick_count"))
-      .orderBy(col("trade_date").desc)
+    TickQueries.dailyStats(TickTable.read(spark, sinkDir), token)
 }

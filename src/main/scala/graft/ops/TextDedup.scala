@@ -136,19 +136,17 @@ object TextDedup {
     indexes.computeIfAbsent((spark, dir), kv => DedupIndex(docs(kv._1, kv._2)))
   }
 
-  /** Drop this (session, dir)'s cached shingle index and signature table. */
+  /** Kind prefixes of every session-cache entry this object builds per
+    * dir, threshold-tagged variants included. */
+  private val CacheKindPrefixes =
+    Seq("simhash_", "minhash_", "ngram_", "ppjoin_", "semantic_clusters_")
+
+  /** Drop this (session, dir)'s cached shingle index and every derived
+    * table built from it, at every threshold. */
   def invalidate(spark: SparkSession, dir: String): Unit = {
     val idx = indexes.remove((spark, dir))
     if (idx != null) idx.close()
-    graft.core.SessionCache.invalidate(spark, "simhash_sigs", dir)
-    graft.core.SessionCache.invalidate(spark, "simhash_sig_pairs", dir)
-    graft.core.SessionCache.invalidate(spark, "minhash_pairs", dir)
-    graft.core.SessionCache.invalidate(spark, "minhash_sigtable", dir)
-    graft.core.SessionCache.invalidate(spark, "ngram_pairs", dir)
-    graft.core.SessionCache.invalidate(spark, "ppjoin_pairs", dir)
-    graft.core.SessionCache.invalidate(spark, "ngram_clusters", dir)
-    graft.core.SessionCache.invalidate(spark, "minhash_clusters", dir)
-    graft.core.SessionCache.invalidate(spark, "simhash_clusters", dir)
+    graft.core.SessionCache.invalidatePrefixed(spark, dir, CacheKindPrefixes)
   }
 
   /** Exact dedup by content hash: one surviving doc_id per distinct

@@ -292,12 +292,18 @@ class FrameReplayStream(source: FrameSource, maxPerBatch: Int)
 
   override def deserializeOffset(json: String): Offset = FrameOffset.parse(json)
 
+  /** One input partition per slice of at most MaxFramesPerSlice frames
+    * of each segment's new range: a large batch reads, decodes and
+    * writes in parallel tasks with no shuffle (TickTable.appendBatch
+    * writes one file per input partition and date). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FrameOffset]
     val e = end.asInstanceOf[FrameOffset]
-    e.counts.collect {
-      case (seg, until) if until > s.countFor(seg) =>
-        FrameReplayPartition(seg, s.countFor(seg), until): InputPartition
+    val max = FrameReplayStream.MaxFramesPerSlice
+    e.counts.flatMap { case (seg, until) =>
+      (s.countFor(seg) until until by max.toLong).map { from =>
+        FrameReplayPartition(seg, from, math.min(from + max, until)): InputPartition
+      }
     }.toArray
   }
 
@@ -314,6 +320,12 @@ class FrameReplayStream(source: FrameSource, maxPerBatch: Int)
       source.committed(seg, c)
     }
   override def stop(): Unit = ()
+}
+
+object FrameReplayStream {
+  /** Frames per input partition at most: the reference's documented
+    * queue size (MAX_QUEUE_SIZE=10000, the reference README.md:118). */
+  val MaxFramesPerSlice = 10000
 }
 
 case class FrameReplayReaderFactory(source: FrameSource) extends PartitionReaderFactory {

@@ -12,29 +12,30 @@ import org.apache.spark.sql.functions._
   *  - sortWithinPartitions(exchange_timestamp) before write: parquet
   *    row-group min/max stats are tight, so within a day, range scans
   *    skip row groups — the same effect as the MergeTree sort key;
-  *  - repartition by (trade_date, token bucket) before the sort: each
-  *    date gets a BOUNDED number of writer tasks (WritersPerDate) —
-  *    repartitioning by date alone serialized every batch into ONE
-  *    writer task (measured in the r15 sustained-ingest run: a 50k-row
-  *    micro-batch took 5.7 s, blowing the 5 s trigger, because a live
-  *    tick stream's rows all land on TODAY's date). Several time-sorted
-  *    files per date-partition is exactly the MergeTree model the
-  *    reference delegates to — each INSERT there is its own sorted
-  *    part — and bucketing the salt by TOKEN keeps a point-lookup's
-  *    rows clustered in fewer files. Still no small-file explosion:
-  *    files per batch per date is capped by the constant, and
-  *    compaction collapses history.
+  *  - a streaming micro-batch commits in ONE narrow stage: each input
+  *    partition writes one time-sorted file per (trade_date, batch_id),
+  *    with no writer shuffle. Parallelism comes from the source, which
+  *    splits a large batch into slices of at most 10,000 frames
+  *    (sources.FrameReplayStream.MaxFramesPerSlice), so a live stream's
+  *    single hot date still gets several writer tasks on a big batch,
+  *    while a 1,000-row batch writes one file instead of being shuffled
+  *    into eight tiny ones. Several time-sorted files per date partition
+  *    is exactly the MergeTree model the reference delegates to — each
+  *    INSERT there is its own sorted part — and compaction collapses
+  *    history;
+  *  - the batch face (`append`, loads and backfills) still repartitions
+  *    by (trade_date, token bucket) into a bounded writer count per date.
   */
 object TickTable {
 
   val PartitionCol = "trade_date"
 
-  /** Writer tasks per date partition per batch (the parts-per-insert
-    * analog). The default 8 balances parallel write against
-    * files-per-batch; a 1000-executor deployment with much larger
-    * batches raises it toward cores-per-date-of-data via the
-    * GRAFT_WRITERS_PER_DATE conf key (r15 verdict #5 — was a
-    * compile-time constant). */
+  /** Writer tasks per date partition of a batch load (`append`), and the
+    * cap on files per (trade_date, batch_id) of a streaming micro-batch
+    * (`appendBatch`) — the parts-per-insert analog. The default 8
+    * balances parallel write against files-per-batch; a 1000-executor
+    * deployment with much larger batches raises it toward
+    * cores-per-date-of-data via the GRAFT_WRITERS_PER_DATE conf key. */
   val WritersPerDate: Int =
     sys.env.get("GRAFT_WRITERS_PER_DATE").flatMap(_.trim.toIntOption).filter(_ > 0)
       .getOrElse {
@@ -53,8 +54,8 @@ object TickTable {
     * count scales with the batch's distinct dates so a multi-date
     * backfill keeps ~WritersPerDate parallel writers per date — one
     * cheap distinct-count action per batch load. The streaming face
-    * (appendBatch) runs per 5 s trigger and documents the
-    * single-hot-date assumption instead of paying that action. */
+    * (appendBatch) pays neither that action nor a shuffle: its writers
+    * follow the source's slices. */
   def append(ticks: DataFrame, path: String): Unit = {
     val dated = ticks.withColumn(PartitionCol, to_date(col("exchange_timestamp")))
     val nDates = math.max(1L, dated.select(PartitionCol).distinct().count())
@@ -62,8 +63,7 @@ object TickTable {
     // repartition here is eligible for AQE partition coalescing, which
     // merges the small (date, bucket) shuffle outputs straight back
     // into one writer task — exactly the serialization the spread
-    // exists to prevent (the bug appendBatch fixed in r15; this face
-    // had kept the column-only form). Capped so a year-long backfill
+    // exists to prevent. Capped so a year-long backfill
     // cannot demand an unbounded shuffle-partition count.
     val writers = math.min(nDates * WritersPerDate, 8192L).toInt
     dated
@@ -86,23 +86,19 @@ object TickTable {
     * batch (crash between sink write and offset commit) replaces its own
     * output instead of duplicating it (several files per partition is
     * fine: the overwrite replaces the whole partition DIRECTORY).
-    * Compaction later collapses the batch_id level. */
+    * Compaction later collapses the batch_id level.
+    *
+    * One narrow stage, no shuffle: each input partition writes one
+    * time-sorted file per (trade_date, batch_id), and a narrow
+    * `coalesce(WritersPerDate)` caps the files when the batch arrives in
+    * more partitions. The source's slicing sets the writer parallelism
+    * (see the object doc); a shuffle here would only spread the few rows
+    * of a small batch over more tiny files. */
   def appendBatch(ticks: DataFrame, path: String, batchId: Long): Unit =
     ticks
       .withColumn(PartitionCol, to_date(col("exchange_timestamp")))
       .withColumn("batch_id", lit(batchId))
-      // EXPLICIT partition count: a column-only repartition is eligible
-      // for AQE partition coalescing, which merges a micro-batch's
-      // small (date, bucket) shuffle outputs straight back into one
-      // task — exactly the serialization the spread exists to prevent
-      // (caught by StorageSpec). An explicit count is AQE-immune.
-      // SINGLE-HOT-DATE ASSUMPTION: a live 5 s micro-batch carries
-      // today's date (midnight-crossing gives one 2-date batch a day,
-      // which briefly shares the 8 writers); counting distinct dates
-      // here would re-evaluate the micro-batch lineage every trigger.
-      // Multi-date REPLAYS/backfills belong on append(), which scales
-      // writers by the batch's distinct dates.
-      .repartition(WritersPerDate, col(PartitionCol), dateSpread)
+      .coalesce(WritersPerDate)
       // partition cols lead the sort — see append()
       .sortWithinPartitions(col(PartitionCol), col("batch_id"), col("exchange_timestamp"))
       .write.mode("overwrite")

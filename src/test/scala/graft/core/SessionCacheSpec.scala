@@ -104,4 +104,24 @@ class SessionCacheSpec extends SparkSpec {
     val rebuilt = graft.ops.TextDedup.index(spark, dir)
     assert(!(rebuilt eq first), "stopped session's index must not be pinned")
   }
+
+  test("TextDedup.invalidate drops every threshold variant of a rewritten dir") {
+    import spark.implicits._
+    import graft.ops.TextDedup
+    val dir = java.nio.file.Files.createTempDirectory("dedupinv").toString
+    def write(base: Long, words: Seq[String]): Unit =
+      Seq(0L, 1L, 2L).map(i => (base + i, (words ++ words.drop(i.toInt)).mkString(" ")))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def ids(t: Double) =
+      TextDedup.ngramClustersAt(spark, dir, t).select("doc_id").as[Long].collect().toSet
+    write(0L, Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta"))
+    assert(ids(0.5) === Set(0L, 1L, 2L))
+    assert(ids(0.2) === Set(0L, 1L, 2L))
+    write(10L, Seq("one", "two", "three", "four", "five", "six"))
+    TextDedup.invalidate(spark, dir)
+    assert(ids(0.5) === Set(10L, 11L, 12L), "ngram_clusters@0.5 must not serve the old corpus")
+    assert(ids(0.2) === Set(10L, 11L, 12L), "ngram_clusters@0.2 must not serve the old corpus")
+    TextDedup.invalidate(spark, dir)
+  }
 }

@@ -3,7 +3,7 @@ package graft.ingest
 import graft.SparkSpec
 import graft.core.{Codec, Schemas}
 import graft.core.Schemas.TickFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -73,5 +73,40 @@ class IngestSpec extends SparkSpec {
     val stats = IngestStream.dailyStats(spark, sink, "2885").collect()
     assert(stats.length === 1)
     assert(stats(0).getAs[Long]("tick_count") === 2L)
+  }
+
+  test("a micro-batch broadcasts the directory loaded once: no tokens.json scan") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("sinkdim").toString
+    val ckpt = Files.createTempDirectory("ckptdim").toString
+    val dim = TokenDirectory.load(spark, writeTokensJson())
+    implicit val ctx = spark.sqlContext
+    val stream = MemoryStream[Array[Byte]]
+    val t0 = 1704447000000L
+    val q = IngestStream.start(spark, stream.toDS(), dim, sink, ckpt,
+      Trigger.ProcessingTime("1 second"))
+    // the executed plan of each micro-batch (the foreachBatch write sees
+    // only the batch's already-planned rows)
+    def batchPlan(frames: Array[Byte]*): String = {
+      stream.addData(frames: _*)
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+    }
+    val plans = try Seq(
+      batchPlan(frame("2885", 1, t0, 286550L),
+        frame("9999", 1, t0 + 1000, 100L)), // BADEX: its exchange is unknown
+      batchPlan(frame("2885", 2, t0 + 2000, 286600L)))
+    finally q.stop()
+    plans.foreach { p =>
+      assert(p.contains("BroadcastHashJoin") && p.contains("LocalTableScan"),
+        s"enrichment must broadcast the local directory:\n$p")
+      assert(!p.contains("FileScan") && !p.contains("tokens.json"),
+        s"a micro-batch must not scan tokens.json:\n$p")
+    }
+
+    val out = spark.read.parquet(sink)
+    assert(out.filter(col("token") === "2885" && col("symbol") === "RELIANCE").count() === 2)
+    assert(out.filter(col("token") === "9999").select("symbol").head().isNullAt(0),
+      "a token on an unknown exchange keeps flowing with a null symbol")
   }
 }

@@ -39,42 +39,39 @@ class StorageSpec extends SparkSpec {
     }
   }
 
-  test("appendBatch spreads a single-date batch across bounded writer tasks, each time-sorted") {
+  test("appendBatch writes one time-sorted file per input partition, capped") {
     import spark.implicits._
-    // the r15 sustained-ingest finding: a LIVE stream's rows all carry
-    // today's date, so repartition-by-date-alone serialized every batch
-    // into one writer task. The spread must (a) produce >1 but
-    // <= WritersPerDate files for a hot date, (b) keep every file
-    // time-sorted (the MergeTree parts analog), (c) stay idempotent
-    // under batch replay.
-    val dir = java.nio.file.Files.createTempDirectory("abspread").toString
-    val ts0 = java.sql.Timestamp.valueOf("2024-01-05 10:00:00")
-    val ticks = (1 to 4000).map { i =>
-      (s"tok${i % 97}", i.toLong,
-        new java.sql.Timestamp(ts0.getTime + (i * 7919) % 3600000))
-    }.toDF("token", "sequence_number", "exchange_timestamp")
-    TickTable.appendBatch(ticks, dir, batchId = 3L)
-    val part = new java.io.File(dir, "trade_date=2024-01-05/batch_id=3")
-    val files = part.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length > 1, "a hot date must not serialize into one writer")
-    assert(files.length <= TickTable.WritersPerDate,
-      s"files per batch per date bounded by WritersPerDate: ${files.length}")
-    files.foreach { f =>
+    // a micro-batch commits in one narrow stage: no writer shuffle, so
+    // each input partition writes one file per (trade_date, batch_id),
+    // a narrow coalesce caps the count at WritersPerDate, every file is
+    // time-sorted (the MergeTree parts analog), and a replayed batch
+    // replaces its own partition instead of duplicating it
+    val dir = java.nio.file.Files.createTempDirectory("abnarrow").toString
+    val ts0 = java.sql.Timestamp.valueOf("2024-01-05 10:00:00").getTime
+    // spark.range fixes the input partition count exactly
+    def ticks(n: Int, parts: Int) = spark.range(0, n, 1, parts).select(
+      concat(lit("tok"), (col("id") % 97).cast("string")).as("token"),
+      col("id").as("sequence_number"),
+      timestamp_millis(lit(ts0) + col("id") * 7919 % 3600000).as("exchange_timestamp"))
+    def files(batch: Long) =
+      new java.io.File(dir, s"trade_date=2024-01-05/batch_id=$batch").listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq
+    TickTable.appendBatch(ticks(1000, 1), dir, batchId = 1L)
+    assert(files(1L).length === 1, "a one-partition 1,000-row batch writes one file")
+    val wide = TickTable.WritersPerDate * 3
+    for ((parts, batch) <- Seq(3 -> 2L, wide -> 3L)) {
+      TickTable.appendBatch(ticks(4000, parts), dir, batch)
+      val n = files(batch).length
+      assert(n >= 1 && n <= math.min(parts, TickTable.WritersPerDate),
+        s"$parts input partitions wrote $n files to one (date, batch_id)")
+    }
+    (1L to 3L).flatMap(files).foreach { f =>
       val ts = spark.read.parquet(f.getAbsolutePath)
         .select("exchange_timestamp").as[java.sql.Timestamp].collect()
-      assert(ts.sameElements(ts.sorted),
-        s"each part file must be time-sorted: ${f.getName}")
+      assert(ts.sameElements(ts.sorted), s"each part file must be time-sorted: ${f.getName}")
     }
-    // token rows cluster into one file (point-lookup locality)
-    val tokFiles = files.map { f =>
-      spark.read.parquet(f.getAbsolutePath)
-        .filter(col("token") === "tok7").count()
-    }
-    assert(tokFiles.count(_ > 0) === 1, "one token's rows live in one bucket file")
-    // replayed batch overwrites its own partition dir, no duplication
-    // (runs LAST: the overwrite replaces the files listed above)
-    TickTable.appendBatch(ticks, dir, batchId = 3L)
-    assert(spark.read.parquet(dir).count() === 4000L)
+    TickTable.appendBatch(ticks(4000, wide), dir, batchId = 3L)
+    assert(spark.read.parquet(dir).count() === 9000L, "a replayed batch must not duplicate rows")
   }
 
   test("append (batch face) spreads hot dates across bounded writers, scaled by distinct dates") {
